@@ -73,29 +73,28 @@ object PipelineRunner {
     // readAny = the reference's `*.xls*` blob filter: modern .xlsx and
     // legacy BIFF8 .xls side by side in the input folder.
     val rows = ExcelSource.readAny(spark, c.fromDir, c.sheetList)
-    // binaryFile paths are URI-ish but may hold raw spaces — take the
-    // basename textually, not via java.net.URI.
-    def prefixOf(file: String): String =
-      Sanitize.fileNamePrefixStr(
-        file.substring(file.lastIndexOf('/') + 1).replaceAll("\\.[^.]*$", ""))
+    val ext = "\\.[^.]*$"
     // The alphanumeric-stripped prefix (A4) can collide across distinct
     // workbooks ("a-b.xlsx" vs "ab.xlsx") — the reference would silently
     // overwrite one workbook's CSV with the other's; fail loudly instead
-    // (surfaces through the runner's error-as-value channel).
-    val files = rows.select(col("file")).distinct().collect().map(_.getString(0))
-    val collisions = files.groupBy(prefixOf).filter(_._2.length > 1)
+    // (surfaces through the runner's error-as-value channel). Checked on
+    // a listing of the input set, so no workbook is parsed twice.
+    val collisions = ExcelSource.anyInputNames(spark, c.fromDir)
+      .groupBy(n => Sanitize.fileNamePrefixStr(n.replaceAll(ext, "")))
+      .filter(_._2.length > 1)
     if (collisions.nonEmpty)
       throw new IllegalArgumentException(
         s"Error - workbook filename prefixes collide after normalization: $collisions")
-    val mapping = spark.createDataFrame(files.toSeq.map(f => (f, prefixOf(f))))
-      .toDF("file", "prefix")
     // The raw .text() writer does no quoting, so the interchange separator
     // must never survive inside a cell — translate '|' to space after the
     // sanitize chain (the reference strips its own CSV-active characters
-    // the same way, HelperFunction.py:36-41).
+    // the same way, HelperFunction.py:36-41). binaryFile paths are URI-ish
+    // but may hold raw spaces — the basename is taken textually.
     val staging = s"${c.toDir}/_ep1_staging"
-    rows.join(broadcast(mapping), Seq("file"))
-      .select(col("prefix"), col("sheet"), col("row_idx"),
+    rows
+      .select(Sanitize.fileNamePrefix(
+          regexp_replace(substring_index(col("file"), "/", -1), ext, "")).as("prefix"),
+        col("sheet"), col("row_idx"),
         concat_ws(CsvIO.Sep,
           transform(col("cells"),
             cell => translate(Sanitize.cell(cell), CsvIO.Sep, " "))).as("line"))

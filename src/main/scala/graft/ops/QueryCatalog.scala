@@ -33,6 +33,9 @@ object QueryCatalog {
   // keys: sessions must stay collectable. The cache is written only AFTER
   // registration completes — caching first would let a failed/partial
   // registration poison the cache and silently serve mixed views on retry.
+  // A view keeps its file listing, and an EP2 upsert swap replaces a
+  // table's files, so a repeat call re-lists each view's files (a
+  // refresh; schemas and footers are not re-read).
   private val registeredDir: java.util.Map[SparkSession, String] =
     java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, String]())
 
@@ -43,7 +46,7 @@ object QueryCatalog {
       if (registeredDir.get(spark) != dir) {
         Tables.registerViews(spark, dir)
         registeredDir.put(spark, dir)
-      }
+      } else Tables.names.foreach(spark.catalog.refreshTable)
     }
     spark.sql(sql)
   }

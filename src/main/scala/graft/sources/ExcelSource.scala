@@ -83,6 +83,20 @@ object ExcelSource {
   def readAny(spark: SparkSession, path: String, sheets: String = "all"): DataFrame =
     readXlsx(spark, path, sheets).unionByName(XlsSource.read(spark, path, sheets))
 
+  /** Names of the workbooks [[readAny]] parses under `path`: its `.xlsx`
+    * and `.xls` filters over the same listing, minus the hidden `_`/`.`
+    * names Spark's file listing skips. Driver-side, no Spark job.
+    */
+  def anyInputNames(spark: SparkSession, path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    resolveInputFiles(fs, p).map(_.getPath.getName).filter { n =>
+      val l = n.toLowerCase
+      (l.endsWith(".xlsx") || l.endsWith(".xls")) &&
+        !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
   private def readXlsx(spark: SparkSession, path: String, sheets: String): DataFrame = {
     guardInputSizes(spark, path, ".xlsx")
     val bin = spark.read.format("binaryFile")

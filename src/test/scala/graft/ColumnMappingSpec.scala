@@ -211,6 +211,25 @@ class ColumnMappingSpec extends SparkSpec {
       Set((1L, 10L), (2L, 20L)))
   }
 
+  test("dropConstraint after merge3 keeps a branch rename's column mapping") {
+    val t = tmpDir("colmap-dropcons") + "/t"
+    Versioned.commit(spark, t, Seq((1L, 10L), (2L, 20L)).toDF("id", "v"))
+    val bt = Versioned.branch(spark, t, "exp")
+    Versioned.renameColumn(spark, bt, "v", "amount")
+    Versioned.addConstraint(spark, t, "pos", "id > 0")
+    val mv = Versioned.merge3(spark, bt)
+    val dv = Versioned.dropConstraint(spark, t, "pos")
+    val m = Versioned.readManifest(spark, t, dv)
+    assert(m.features == Set("column-mapping") && m.colmap == Map("amount" -> "v"),
+      s"dropConstraint must carry the mapping forward: ${m.features} ${m.colmap}")
+    assert(m.constraints.isEmpty)
+    def pairs(v: Long) = Versioned.read(spark, t, Some(v)).collect()
+      .map(r => (r.getLong(0), Option(r.get(1)))).toSet
+    assert(pairs(mv) == Set((1L, Some(10L)), (2L, Some(20L))))
+    assert(pairs(dv) == Set((1L, Some(10L)), (2L, Some(20L))),
+      "the renamed column must not read NULL after the constraint drop")
+  }
+
   test("a manifest naming an unknown feature refuses at every verb") {
     val t = tmpDir("colmap-unknown") + "/t"
     Versioned.commit(spark, t, Seq((1L, "a")).toDF("id", "s"))

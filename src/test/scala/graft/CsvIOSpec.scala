@@ -22,6 +22,26 @@ class CsvIOSpec extends SparkSpec {
     assert(a == b, "round-trip must be lossless after sanitize removes csv-hostile chars")
   }
 
+  test("typed reads are strict: integral columns take the zero-fraction " +
+      "float form, unparseable cells fail instead of landing NULL") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("s", StringType), StructField("d", DoubleType)))
+    def readLines(lines: String*) = {
+      val dir = tmpDir("csv-strict")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "part.csv"),
+        lines.mkString("", "\n", "\n"))
+      CsvIO.readPipe(spark, dir, schema).collect().map(_.toSeq).toSet
+    }
+    assert(readLines("1.0|x|1.5", "2|y|2", "-3.00|z|", "||", "4|short") ==
+      Set(Seq(1L, "x", 1.5), Seq(2L, "y", 2.0), Seq(-3L, "z", null),
+        Seq(null, null, null), Seq(4L, "short", null)))
+    Seq("1.5|x|1.0", "abc|x|1.0", "99999999999999999999|x|1.0", "1|x|zz").foreach { bad =>
+      val e = intercept[Exception](readLines("1|ok|1.0", bad))
+      assert(e.getMessage.contains("Error - pipe-CSV cell"), s"$bad: ${e.getMessage}")
+    }
+  }
+
   test("listFiles + excelInputFilter keep only xls-ish names (A6)") {
     import spark.implicits._
     val dir = tmpDir("listing")

@@ -292,8 +292,9 @@ class ExcelPipelineSpec extends SparkSpec {
     val res = PipelineRunner.run(spark, PipelineRunner.ExcelToCsv(in, out))
     assert(res.isRight, s"step failed: $res")
     val jobs = tracker.getJobIdsForGroup(null).length - before
-    // scan + distinct-files + one dynamic-partitioned write ≈ 5 jobs; the
-    // old per-sheet loop would need ≥ 12 write jobs alone for 12 sheets
+    // one dynamic-partitioned write over the parsed rows (the workbook list
+    // comes from a listing); the old per-sheet loop would need ≥ 12 write
+    // jobs alone for 12 sheets
     assert(jobs <= 8, s"EP1 must be a constant number of jobs, saw $jobs for 12 sheets")
     val csvs = new java.io.File(out).listFiles().map(_.getName).filter(_.endsWith(".csv"))
     assert(csvs.length == 12, s"one csv dir per sheet: ${csvs.toSeq.sorted}")
@@ -321,5 +322,63 @@ class ExcelPipelineSpec extends SparkSpec {
     val bad = PipelineRunner.run(spark, PipelineRunner.LoadTable(csvDir, table, "truncate"))
     assert(bad.isLeft)
     assert(bad.swap.toOption.get.message.startsWith("Error -"))
+  }
+
+  test("EP1 → EP2: integer cells upsert into a bigint-keyed table") {
+    import spark.implicits._
+    val root = tmpDir("ep2-bigint")
+    val in = s"$root/in"
+    new java.io.File(in).mkdirs()
+    ExcelSource.writeWorkbook(s"$in/keys.xlsx",
+      Seq("s1" -> Seq(Seq("1", "x", "1.5"), Seq("2", "y", "2.5"))))
+    assert(PipelineRunner.run(spark,
+      PipelineRunner.ExcelToCsv(in, s"$root/csv")).isRight)
+    val table = s"$root/table"
+    Seq((1L, "old", 0.5), (9L, "keep", 9.5)).toDF("k", "v", "p").write.parquet(table)
+    val res = PipelineRunner.run(spark,
+      PipelineRunner.LoadTable(s"$root/csv/*.csv", table, "upsert", Seq("k")))
+    assert(res.isRight, s"step failed: $res")
+    val got = spark.read.parquet(table).collect()
+      .map(r => s"${r.get(0)}|${r.getString(1)}").toSet
+    assert(got == Set("1|x", "2|y", "9|keep"))
+  }
+
+  test("EP1: workbook names whose prefixes collide fail the step loudly") {
+    val root = tmpDir("ep1-collide")
+    val in = s"$root/in"
+    new java.io.File(in).mkdirs()
+    Seq("a-b.xlsx", "ab.xlsx").foreach(n =>
+      ExcelSource.writeWorkbook(s"$in/$n", Seq("s" -> Seq(Seq("1", "x")))))
+    val res = PipelineRunner.run(spark, PipelineRunner.ExcelToCsv(in, s"$root/csv"))
+    assert(res.left.exists(_.message.contains("prefixes collide")), s"got $res")
+  }
+
+  test("EP3 after an EP2 upsert swap reads the table's new files") {
+    import spark.implicits._
+    val root = tmpDir("ep3-refresh")
+    val tables = s"$root/tables"
+    Seq((0L, "x")).toDF("id", "name").write.parquet(s"$tables/region.parquet")
+    Seq("customer", "part", "orders", "events", "documents", "embeddings")
+      .foreach(n => Seq((0L, "x")).toDF("id", "name").write.parquet(s"$tables/$n.parquet"))
+    Seq((1L, 0L), (2L, 1L)).toDF("s_suppkey", "s_nationkey")
+      .write.parquet(s"$tables/supplier.parquet")
+    Seq((0L, "N0"), (1L, "N1")).toDF("n_nationkey", "n_name")
+      .write.parquet(s"$tables/nation.parquet")
+    Seq((1.0, 1L, 10.0, 0.0)).toDF("k", "l_suppkey", "l_extendedprice", "l_discount")
+      .write.parquet(s"$tables/lineitem.parquet")
+    def revenue() = {
+      val r = PipelineRunner.run(spark,
+        PipelineRunner.CallQuery(tables, "revenue_by_nation"))
+      assert(r.isRight, s"EP3 failed: $r")
+      graft.ops.QueryCatalog.run(spark, tables, "revenue_by_nation").collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSet
+    }
+    assert(revenue() == Set(("N0", 10.0)))
+    val csv = s"$root/csv"
+    CsvIO.writePipe(Seq((2.0, 2L, 5.0, 0.0)).toDF("k", "s", "p", "d"), csv)
+    val up = PipelineRunner.run(spark, PipelineRunner.LoadTable(csv,
+      s"$tables/lineitem.parquet", "upsert", Seq("k")))
+    assert(up.isRight, s"EP2 failed: $up")
+    assert(revenue() == Set(("N0", 10.0), ("N1", 5.0)))
   }
 }
