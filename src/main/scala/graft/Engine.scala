@@ -69,35 +69,25 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred schema per (path, length, mtime) — `spark.read.parquet`
-    * re-infers the schema on EVERY call (~80 ms of driver-side footer
-    * work, measured r17), and a bench run re-builds each entry's frame
-    * for every timed run. The file-identity key (length + mtime, the
-    * Layout.typMemo discipline) keeps the memo honest if a table file
-    * is ever replaced; the memo is METADATA only — every run still
-    * scans the parquet data.
-    */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val df = spark.read.schema(tableSchema(spark, path)).parquet(path)
     if (name == "events") normalizeTs(df) else df
   }
 
-  /** The memoized inferred schema of one parquet table file.
+  /** The inferred schema of one parquet table file, cached in
+    * [[MetaCache]] by file identity.
     *
     * Inference is DRIVER-SIDE (one footer read, zero Spark jobs):
     * `spark.read.parquet(path).schema` launches a footer-reading job
     * (~80 ms of scheduler+inference latency, measured r17) on every
-    * memo MISS, and protocol entries miss once per freshly staged file
+    * cache miss, and protocol entries miss once per freshly staged file
     * per run. The footer read reproduces Spark's own single-file
     * inference exactly — prefer the Spark-written schema JSON in the
     * footer's key-value metadata, fall back to the session-conf-driven
     * parquet→Catalyst converter (same code `ParquetFileFormat`'s
     * inference runs per footer). Directory paths (length/mtime don't
-    * track content — ADVICE r17) bypass both the memo and the footer
+    * track content — ADVICE r17) bypass both the cache and the footer
     * path and pay the ordinary distributed inference.
     */
   def tableSchema(spark: SparkSession,
@@ -106,13 +96,8 @@ object Tables {
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(p)
     if (st.isDirectory) return spark.read.parquet(path).schema
-    val key = (path, st.getLen, st.getModificationTime)
-    Option(schemaMemo.get(key)).getOrElse {
-      val sch = footerSchema(spark, st)
-      if (schemaMemo.size > 1024) schemaMemo.clear()
-      schemaMemo.put(key, sch)
-      sch
-    }
+    MetaCache(("schema", path, st.getLen, st.getModificationTime))(
+      footerSchema(spark, st))
   }
 
   /** Single-footer schema inference, driver-side. Matches
@@ -147,7 +132,7 @@ object Tables {
 
   /** Schema of a FLAT parquet dir (single-write state dirs: MV state,
     * incremental-operator state, staged-swap targets): inferred driver-
-    * side from the first data file's footer via [[tableSchema]]'s memo —
+    * side from the first data file's footer via [[tableSchema]]'s cache —
     * zero Spark jobs on repeat reads. Falls back to ordinary `spark.read`
     * inference when the dir is missing/empty or holds no visible data
     * file, so error semantics (UNABLE_TO_INFER on an empty dir) are
@@ -172,7 +157,7 @@ object Tables {
   }
 
   /** `spark.read.parquet(dir)` for a flat single-write dir, with the
-    * schema supplied from [[dirSchema]]'s memoized footer read instead
+    * schema supplied from [[dirSchema]]'s cached footer read instead
     * of a per-call inference job.
     */
   def readDir(spark: SparkSession,

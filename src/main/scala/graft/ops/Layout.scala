@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.MetaCache
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -502,7 +503,7 @@ object Layout {
           else Seq((f, "", "", null: String, null: String, nRowsF,
             Option.empty[Long], fLen, parts)))
           // record each emitted row's (column, typ) so the writer can
-          // PRIME the type memo — set semantics, so task retries and
+          // PRIME the stat-type cache — set semantics, so task retries and
           // speculative duplicates are harmless
           typAcc.foreach(acc => out.foreach(r => acc.add((r._2, r._3))))
           out
@@ -541,15 +542,16 @@ object Layout {
       s"no parquet files found under $path — nothing to harvest stats from")
     replaceDirAtomic(spark, s"$path/_stats")(tmp =>
       stats.coalesce(1).write.mode("overwrite").parquet(tmp))
-    // PRIME the per-dir type memo from the write job's own (column, typ)
-    // observations — the first skip decision over this manifest then
-    // resolves its types with zero probe jobs. Exactly the set a probe
-    // would collect: every manifest row passed through the accumulator.
+    // PRIME the dir's stat-type cache entry from the write job's own
+    // (column, typ) observations — the first skip decision over this
+    // manifest then resolves its types with zero probe jobs. Exactly the
+    // set a probe would collect: every manifest row passed through the
+    // accumulator.
     import scala.jdk.CollectionConverters._
     val colTyps = typAcc.value.asScala.toSeq.distinct
       .groupBy(_._1).map { case (c, xs) =>
         c -> xs.map(x => Option(x._2).getOrElse("")).distinct.sorted }
-    primeTypMemo(spark, s"$path/_stats", colTyps)
+    MetaCache.put(("statTyps", dirListingKey(spark, s"$path/_stats")), colTyps)
   }
 
   /** Land a manifest dir ATOMICALLY next to live data (ADVICE r14):
@@ -836,22 +838,6 @@ object Layout {
     */
   val MaxDriverKeptFiles: Int = 2 << 20
 
-  /** Recorded stat types per manifest DIR — column → distinct recorded
-    * `typ` strings — keyed by the dir's file listing (name:length:mtime
-    * per manifest file, the [[graft.Tables.tableSchema]] identity
-    * discipline: object stores report constant mtimes for pseudo-dirs,
-    * file objects carry real ones, so an in-place `_stats` re-harvest
-    * always misses). Per-DIR keys (r18, replacing the per-path-set key)
-    * let a multi-dir snapshot resolve its types from the union of its
-    * dirs' memo entries with ZERO probe jobs, and let
-    * [[writeStatsManifest]] PRIME the entry at write time (the harvest
-    * already sees every row's typ) — so in the steady state no verb ever
-    * pays a type-probe job. Bounded (cleared wholesale past 4096 keys);
-    * sound because stats manifests are write-once under UUID-unique dirs.
-    */
-  private val dirTypMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[String, Seq[String]]]()
-
   /** One manifest dir's identity: path + file listing (name:len:mtime). */
   private def dirListingKey(spark: org.apache.spark.sql.SparkSession,
       statsPath: String): String = {
@@ -864,33 +850,24 @@ object Layout {
     s"$statsPath@$listing"
   }
 
-  private[graft] def primeTypMemo(spark: org.apache.spark.sql.SparkSession,
-      statsPath: String, colTyps: Map[String, Seq[String]]): Unit = {
-    if (dirTypMemo.size > 4096) dirTypMemo.clear()
-    dirTypMemo.put(dirListingKey(spark, statsPath), colTyps)
-  }
-
   /** Resolved stat type per queried column over a manifest-dir set:
-    * per-dir distinct typs from the memo (a miss probes THAT dir once —
-    * one tiny job — and fills its whole column map), unioned and
-    * resolved by [[resolveTyp]]. The union of per-dir distinct sets IS
-    * the global distinct set, so resolution equals the old single-probe
-    * semantics exactly.
+    * each dir's column → distinct recorded typs, cached in [[MetaCache]]
+    * under the dir's listing (a miss probes THAT dir once — one tiny
+    * job — and fills its whole column map; [[writeStatsManifest]] primes
+    * the entry at write time, so in the steady state no verb pays a
+    * probe job), unioned and resolved by [[resolveTyp]]. The union of
+    * per-dir distinct sets IS the global distinct set, so resolution
+    * equals a single probe over all dirs exactly.
     */
   private def resolvedTyps(spark: org.apache.spark.sql.SparkSession,
       statsPaths: Seq[String], columns: Seq[String]): Seq[String] = {
     val maps = statsPaths.sorted.map { p =>
-      val key = dirListingKey(spark, p)
-      Option(dirTypMemo.get(key)).getOrElse {
-        val rows = readStats(spark, Seq(p))
-          .select(col("column"), col("typ")).distinct().collect()
-        val m = rows.groupBy(_.getString(0)).map { case (c, rs) =>
-          c -> rs.map(r => Option(r.getString(1)).getOrElse(""))
-            .distinct.sorted.toSeq
-        }
-        if (dirTypMemo.size > 4096) dirTypMemo.clear()
-        dirTypMemo.put(key, m)
-        m
+      MetaCache(("statTyps", dirListingKey(spark, p))) {
+        readStats(spark, Seq(p)).select(col("column"), col("typ"))
+          .distinct().collect().groupBy(_.getString(0)).map { case (c, rs) =>
+            c -> rs.map(r => Option(r.getString(1)).getOrElse(""))
+              .distinct.sorted.toSeq
+          }
       }
     }
     columns.map { c =>
@@ -1282,7 +1259,7 @@ object Layout {
     val kept = d.kept
     if (kept == 0) return (emptyPlan, 0, total)
     val statuses = keptStatuses(spark, d)
-    // schema via the file-identity memo (Tables.tableSchema): a protocol
+    // schema via the file-identity cache (Tables.tableSchema): a protocol
     // entry plans several pruned scans over the same immutable staged
     // files, and each bare inference costs ~80 ms of driver footer work
     val dataSchema = graft.Tables.tableSchema(spark,

@@ -164,7 +164,7 @@ final class GraftSqlParser(spark: SparkSession, delegate: ParserInterface)
     // its EXECUTION runs inside the DDL seed scope — the only context
     // where resolving an empty location is allowed to write the v1
     // commit (plain schema-specified READS must never mutate storage).
-    // Any DDL naming the provider also invalidates the name→path memo
+    // Any DDL naming the provider also invalidates the name→path cache
     // used for targeted relation-cache drops.
     case _ if GraftProviderDdlRe.findFirstIn(sqlText).isDefined =>
       Versioned.markCatalogChanged()
@@ -219,7 +219,7 @@ object GraftSqlParser {
      """(?:\s+WITH\s+(?:NDV|SKETCHES))*\s*;?\s*$""").r
   private val AnalyzeNdvRe = """(?is)\s+WITH\s+NDV\b""".r
   private val AnalyzeSketchesRe = """(?is)\s+WITH\s+SKETCHES\b""".r
-  // any statement that names the provider — catalog-memo invalidation
+  // any statement that names the provider — catalog-cache invalidation
   private val GraftProviderDdlRe = """(?is)USING\s+`?graft-table`?""".r
   private val AlterSetPartRe =
     """(?is)^\s*ALTER\s+TABLE\s+(.+?)\s+SET\s+PARTITIONED\s+BY\s*(\(.*)$""".r
@@ -935,7 +935,7 @@ final case class GraftDdlScopeCommand(inner: LogicalPlan)
     }
     // the parse-time bump precedes the catalog REGISTRATION this run
     // just performed — bump again so a commit whose name→path scan raced
-    // this DDL can never serve a memo missing the new name
+    // this DDL can never serve a cached list missing the new name
     Versioned.markCatalogChanged()
     rows
   }

@@ -14,6 +14,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.TimestampType
 
+import graft.MetaCache
 import graft.sources.VersionedRelation
 
 /** Metadata-only aggregates for SQL — the `OptimizeMetadataOnlyQuery`
@@ -125,9 +126,8 @@ final class GraftStatsAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
     try {
       val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
       val cols = aggExprs.collect { case MinMaxCol(_, c, _) => c }.distinct
-      // the memo key carries the version's manifest FILE identity
-      // (length + mtime, the Layout.typMemo discipline): a table dir
-      // deleted and rebuilt at the same path REUSES version numbers,
+      // cache keys carry the version's manifest FILE identity: a table
+      // dir deleted and rebuilt at the same path REUSES version numbers,
       // and a bare (table, version) key would serve the dead table's
       // answers
       val stampPath = new org.apache.hadoop.fs.Path(
@@ -139,17 +139,16 @@ final class GraftStatsAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // per-column one-row frames from the stats verbs; evaluated
       // EAGERLY at optimization time (driver-coordinated metadata jobs,
       // the OptimizeMetadataOnlyQuery contract). Any None → no rewrite.
-      // MEMOIZED per (table, version, column): a commit's answer is
+      // Cached per (table, version, column): a commit's answer is
       // immutable by the CAS protocol (dv changes land as NEW versions),
       // and the same query's plan tree is re-optimized more than once
-      // (the require-then-union entry shape) — without the memo every
+      // (the require-then-union entry shape) — without the cache every
       // re-optimization re-pays the manifest jobs. Only successes
       // cache: an ANALYZE that backfills stats must be seen.
       var scanned = 0; var referenced = 0
       val frames: Map[String, org.apache.spark.sql.Row] = cols.map { c =>
-        val key = (vr.table, vr.version, stamp, c)
-        val (row, sc, tot) = Option(GraftStatsAggRule.frameMemo.get(key))
-          .getOrElse {
+        val (row, sc, tot) =
+          MetaCache(("statsFrame", vr.table, vr.version, stamp, c)) {
             val (frame, s, t) =
               graft.ops.Versioned.statsAgg(spark, vr.table, c, Some(vr.version))
                 .getOrElse(return None)
@@ -157,29 +156,18 @@ final class GraftStatsAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
             // LocalRelation substitution must not inherit — fall through
             if (frame.schema("min_v").dataType.isInstanceOf[TimestampType.type])
               return None
-            val v = (frame.first(), s, t)
-            if (GraftStatsAggRule.frameMemo.size > 4096)
-              GraftStatsAggRule.frameMemo.clear()
-            GraftStatsAggRule.frameMemo.put(key, v)
-            v
+            (frame.first(), s, t)
           }
         scanned += sc; referenced = math.max(referenced, tot)
         c -> row
       }.toMap
       val n: Long =
-        if (aggExprs.exists { case CountStar(_) => true; case _ => false }) {
-          val key = (vr.table, vr.version, stamp)
-          Option(GraftStatsAggRule.countMemo.get(key)).map(_.longValue())
-            .getOrElse {
-              val v = graft.ops.Versioned
-                .rowCount(spark, vr.table, Some(vr.version))
-                .getOrElse(return None)
-              if (GraftStatsAggRule.countMemo.size > 4096)
-                GraftStatsAggRule.countMemo.clear()
-              GraftStatsAggRule.countMemo.put(key, v)
-              v
-            }
-        } else 0L
+        if (aggExprs.exists { case CountStar(_) => true; case _ => false })
+          MetaCache(("statsCount", vr.table, vr.version, stamp)) {
+            graft.ops.Versioned.rowCount(spark, vr.table, Some(vr.version))
+              .getOrElse(return None)
+          }
+        else 0L
       val values: Seq[Any] = aggExprs.map {
         case CountStar(_) => java.lang.Long.valueOf(n)
         case MinMaxCol(a, c, isMin) =>
@@ -211,14 +199,6 @@ object GraftStatsAggRule {
 
   private val lastAnswers =
     new java.util.concurrent.ConcurrentHashMap[String, Answer]()
-
-  // success-only memos — a snapshot's answer is immutable by the commit
-  // protocol (mutations mint NEW versions); the manifest-stamp key
-  // component guards the rebuilt-at-the-same-path case
-  private[plans] val frameMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, String, String), (org.apache.spark.sql.Row, Int, Int)]()
-  private[plans] val countMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, String), java.lang.Long]()
 
   private[plans] def record(table: String, a: Answer): Unit =
     lastAnswers.put(table, a)

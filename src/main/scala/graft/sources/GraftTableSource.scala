@@ -123,7 +123,7 @@ class GraftTableSource extends RelationProvider
     val spark = sqlContext.sparkSession
     val exists = Versioned.latestVersion(spark, path).isDefined
     // a CTAS/saveAsTable may be registering a new catalog name over this
-    // path — invalidate the name→path memo used for targeted cache drops
+    // path — invalidate the name→path cache used for targeted cache drops
     if (!exists) Versioned.markCatalogChanged()
     mode match {
       case SaveMode.Append =>

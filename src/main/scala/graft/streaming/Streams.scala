@@ -51,7 +51,7 @@ object Streams {
     * row (ADVICE r8).
     */
   def probeTsType(spark: SparkSession, path: String): DataType =
-    // memoized per file identity (Tables.tableSchema): a stream entry
+    // cached per file identity (Tables.tableSchema): a stream entry
     // re-probes the same staged source on every bench run, and schema
     // inference costs ~80 ms of driver footer work per probe
     try {

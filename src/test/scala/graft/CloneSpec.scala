@@ -141,4 +141,29 @@ class CloneSpec extends SparkSpec {
     assert(Versioned.dropClone(spark, src, dst))
     Versioned.vacuum(spark, src)
   }
+
+  test("a table created where a dropped clone lived stages into its own data dir") {
+    val src = tmpDir("clone-reuse") + "/t"
+    val d = tmpDir("clone-reuse-dst") + "/c"
+    Versioned.commit(spark, src,
+      (1 to 5).map(i => (i.toLong, s"a$i")).toDF("id", "s"))
+    Versioned.shallowClone(spark, src, d)
+    // the read resolves (and caches) the clone's data root: <src>/data
+    assert(Versioned.read(spark, d).count() == 5L)
+    assert(Versioned.dropClone(spark, src, d))
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(); ()
+    }
+    rm(new java.io.File(d))
+    // a plain table at the same path: its version 1 must land in <d>/data,
+    // where the source's vacuum cannot reach it
+    Versioned.commit(spark, d,
+      (7 to 9).map(i => (i.toLong, s"n$i")).toDF("id", "s"))
+    assert(dirsUnder(s"$d/data").size == 1,
+      s"the new table must own its data dir: ${dirsUnder(s"$d/data")}")
+    Versioned.vacuum(spark, src, retainLast = 1)
+    assert(Versioned.read(spark, d).as[(Long, String)].collect().toSet ==
+      (7 to 9).map(i => (i.toLong, s"n$i")).toSet)
+  }
 }

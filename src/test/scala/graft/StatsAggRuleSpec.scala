@@ -149,4 +149,40 @@ class StatsAggRuleSpec extends SparkSpec {
     assert(r1.getLong(0) == 100L && r1.getLong(1) == 100L,
       s"VERSION AS OF must answer the pinned snapshot's stats: $r1")
   }
+
+  test("readers racing a writer get each pinned version's exact answer") {
+    val t = tmpDir("statsrule-race") + "/t"
+    def batch(i: Int) = spark.range(i * 100L, i * 100L + 100).toDF("id")
+    Versioned.commitWithStats(spark, t, batch(0), Seq("id"))
+    val appends = 6
+    @volatile var writing = true
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val checked = new java.util.concurrent.atomic.AtomicInteger(0)
+    val readers = (0 until 4).map { r =>
+      new Thread(() => {
+        val rnd = new scala.util.Random(r)
+        try while (writing || checked.get < 8) {
+          val v = 1L + rnd.nextInt(Versioned.latestVersion(spark, t).get.toInt)
+          val got = spark.sql(s"SELECT COUNT(*), MIN(id), MAX(id) " +
+            s"FROM graft.`$t` VERSION AS OF $v").first()
+          val snap = Versioned.read(spark, t, Some(v))
+          val want = snap.agg(org.apache.spark.sql.functions.min("id"),
+            org.apache.spark.sql.functions.max("id")).first()
+          val n = snap.count()
+          if (got.getLong(0) != n || got.getLong(1) != want.getLong(0) ||
+              got.getLong(2) != want.getLong(1))
+            errs.add(s"v$v: got $got, want count=$n min/max=$want")
+          checked.incrementAndGet()
+        } catch { case e: Throwable => errs.add(s"reader $r: $e") }
+      })
+    }
+    readers.foreach(_.start())
+    try (1 to appends).foreach(i =>
+      Versioned.commitWithStats(spark, t, batch(i), Seq("id")))
+    finally writing = false
+    readers.foreach(_.join())
+    assert(errs.isEmpty, errs.toArray.mkString("\n"))
+    assert(Versioned.latestVersion(spark, t).contains(appends + 1L))
+    assert(checked.get >= 8)
+  }
 }

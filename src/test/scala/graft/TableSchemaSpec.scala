@@ -43,4 +43,20 @@ class TableSchemaSpec extends SparkSpec {
     val b = Tables.tableSchema(spark, f)
     assert(a eq b) // memo hit — no second footer read
   }
+
+  test("a hot entry stays cached across 1,100 one-off loads") {
+    val hotDir = tmpDir("tblschema-hot")
+    spark.range(3).toDF("id").coalesce(1).write.mode("overwrite").parquet(hotDir)
+    val hot = new java.io.File(hotDir).listFiles
+      .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
+    val a = Tables.tableSchema(spark, hot)
+    val dir = tmpDir("tblschema-many")
+    spark.range(0, 1100, 1, 1100).toDF("id").write.mode("overwrite").parquet(dir)
+    val files = new java.io.File(dir).listFiles
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
+    assert(files.length == 1100)
+    files.foreach(f => Tables.tableSchema(spark, f))
+    assert(Tables.tableSchema(spark, hot) eq a,
+      "1,100 other loads must not evict the hot entry")
+  }
 }
