@@ -1,0 +1,583 @@
+package graft
+
+import graft.llm.{Dedup, IncrementalSetJoin, SetJoin}
+import graft.ops.{FileOps, IncrementalLinkage, Linkage, PageRank, Sessions, Upsert, Versioned}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** Scale lab: the evidence behind the engine's scaling claims, one named
+  * case per claim (dedup cost tracks Σ bucket², PageRank is linear in
+  * |E|, `versionAsOf` takes O(log n) probes, ...).
+  *
+  * Usage (ONE size per invocation — fresh JVM per curve point, so JIT/GC
+  * state from a smaller point never flatters a bigger one):
+  *   sbt "runMain graft.ScaleLab <case> [params...]"
+  * e.g. `ScaleLab pagerank 20000000 2 64`. Parameters are positional;
+  * each case lists them with their defaults in [[cases]], and running
+  * the lab with no or an unknown case prints that list. Each run prints
+  * one JSON line {"metric":"<case>_scale",...}. A timed figure is the
+  * median of `runs` timed calls after one untimed warm-up call; the
+  * warm-up's result supplies the case's deterministic fields (candidate
+  * counts, rank mass, ...), the linearity anchors printed next to the
+  * timing. Every case gets one scratch dir, deleted when it ends.
+  */
+object ScaleLab {
+
+  /** A JSON line's fields in print order. A value is a number (printed
+    * by `toString`), a String (quoted), a [[Fixed]] or a `Seq[Fields]`
+    * (an array of objects).
+    */
+  type Fields = Seq[(String, Any)]
+
+  /** A number printed with `digits` decimals. */
+  final case class Fixed(x: Double, digits: Int)
+
+  /** What a case body sees: the session, its parameters by name, its
+    * scratch dir and the sf dir the upsert case reads `lineitem` from.
+    */
+  final class Ctx(val spark: SparkSession, params: Map[String, String],
+      val scratch: String, val sfDir: String) {
+    def long(p: String): Long = params(p).toLong
+    def int(p: String): Int = params(p).toInt
+    def list(p: String): Seq[String] = params(p).split(",").map(_.trim).toSeq
+  }
+
+  /** A named case: its positional parameters with defaults, and its body. */
+  final case class Case(name: String, params: Seq[(String, String)], body: Ctx => Fields)
+
+  private val sized = Seq("runs" -> "3", "partitions" -> "32")
+
+  val cases: Seq[Case] = Seq(
+    Case("dedup", ("rows" -> "1000000") +: sized, dedup),
+    Case("pagerank", ("edges" -> "2000000") +: sized, pagerank),
+    Case("linkage", ("records" -> "1000000") +: sized :+ ("prefixLen" -> "5"), linkage),
+    Case("incremental_linkage", Seq("records" -> "1000000", "batch" -> "50000") ++
+      sized :+ ("prefixLen" -> "5"), incrementalLinkage),
+    Case("log", Seq("commits" -> "1000", "probeRuns" -> "20"), log),
+    Case("sessionize", Seq("rowsList" -> "2000000,10000000,20000000",
+      "users" -> "20000", "runs" -> "3"), sessionize),
+    Case("setjoin", ("corpusRows" -> "200000") +: sized, setjoin),
+    Case("span", ("rows" -> "1000000") +: sized, span),
+    Case("upsert", Seq("multipliers" -> "1,4,10", "runs" -> "5"), upsert))
+
+  private def usageOf(c: Case): String =
+    c.name + c.params.map { case (p, d) => s" [$p=$d]" }.mkString
+
+  private def usage: String = cases.map(usageOf).mkString("\n")
+
+  /** Run case `name` on `spark` with positional `args` (missing ones take
+    * their defaults); returns its JSON line's fields.
+    */
+  def run(spark: SparkSession, name: String, args: Seq[String],
+      sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")): Fields = {
+    val c = cases.find(_.name == name)
+      .getOrElse(throw new IllegalArgumentException(s"unknown case $name; cases:\n$usage"))
+    require(args.length <= c.params.length, s"too many parameters; usage: ${usageOf(c)}")
+    val params = c.params.zipWithIndex.map { case ((p, d), i) => p -> args.lift(i).getOrElse(d) }
+    val scratch = java.nio.file.Files.createTempDirectory("graft_scalelab").toFile
+    try c.body(new Ctx(spark, params.toMap, scratch.toString, sfDir))
+    finally FileUtils.deleteQuietly(scratch)
+  }
+
+  def json(fields: Fields): String = fields.map { case (k, v) =>
+    val s = v match {
+      case str: String => s""""$str""""
+      case Fixed(x, d) => s"%.${d}f".formatLocal(java.util.Locale.ROOT, x)
+      case rows: Seq[_] => rows.map(r => json(r.asInstanceOf[Fields])).mkString("[", ",", "]")
+      case n => n.toString // Double.toString is locale-safe (Bench.scala's JSON contract)
+    }
+    s""""$k":$s"""
+  }.mkString("{", ",", "}")
+
+  def main(args: Array[String]): Unit = {
+    if (!args.headOption.exists(n => cases.exists(_.name == n))) {
+      System.err.println(s"usage: ScaleLab <case> [params...]; cases:\n$usage")
+      sys.exit(2)
+    }
+    val spark = Engine.session()
+    val fields = try run(spark, args.head, args.tail.toSeq) finally spark.stop()
+    println(json(fields))
+  }
+
+  /** Seconds `body` took, and its result. */
+  private def time[T](body: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val r = body
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+
+  /** Median seconds of `runs` timed calls of `body`, each after an
+    * untimed `prep`.
+    */
+  private def median(runs: Int, prep: => Unit = ())(body: => Any): Double = {
+    val times = (1 to runs).map { _ => prep; time(body)._1 }.sorted
+    times(times.length / 2)
+  }
+
+  /** One untimed warm-up call of `job` (after `prep`), whose result is
+    * returned, then [[median]] over `runs` more.
+    */
+  private def warmMedian[T](runs: Int, prep: => Unit = ())(job: => T): (T, Double) = {
+    prep
+    val r = job
+    (r, median(runs, prep)(job))
+  }
+
+  /** Synthetic text corpus, fully distributed generation (no testdata
+    * dependence, any size): docs `lo until hi`, each `nTok`
+    * xxhash64-derived words over a 50k vocabulary; every 10th doc is a
+    * near-copy of its predecessor with token 0 replaced (doc ids ending
+    * in 9 reuse the PREVIOUS doc's tokens except token 0), a
+    * deterministic 10% near-dup density at every size.
+    */
+  private def textCorpus(spark: SparkSession, lo: Long, hi: Long, parts: Int,
+      nTok: Int): DataFrame = {
+    import spark.implicits._
+    spark.range(lo, hi, 1, parts).select($"id".as("doc_id"),
+      concat_ws(" ", (0 until nTok).map { j =>
+        val base =
+          if (j == 0) $"id"
+          else when($"id" % 10 === 9, $"id" - 1).otherwise($"id")
+        concat(lit("w"), pmod(xxhash64(base * nTok + j), lit(50000L)))
+      }: _*).as("text"))
+  }
+
+  /** Synthetic dirty name corpus: each record id in `0 until n` gets a
+    * 12-hex md5 name (`base`); ids ≡ 7 (mod 10) also emit a typo copy
+    * under id+1e9 (`dirty` = base ∪ copies).
+    */
+  private def dirtyNames(spark: SparkSession, n: Long, parts: Int): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val base = spark.range(0, n, 1, parts)
+      .select($"id", substring(md5($"id".cast("string")), 1, 12).as("name"))
+    (base, base.unionByName(typos(base.filter($"id" % 10 === 7), 1000000000L)))
+  }
+
+  /** Distance-1 copies of `names` under id + `offset`: char 7 deleted,
+    * AFTER the 5-char blocking prefix, so blocking keeps the true pair.
+    */
+  private def typos(names: DataFrame, offset: Long): DataFrame =
+    names.select((col("id") + offset).as("id"),
+      concat(substring(col("name"), 1, 6), substring(col("name"), 8, 12)).as("name"))
+
+  /** MinHash-LSH dedup (COVERAGE.md "MinHash-LSH near-dup"): candidate
+    * generation joins on (band, band_key) buckets, so total cost is
+    * signatures (linear in docs) + Σ bucket² (bounded by dup density,
+    * not corpus²). If that claim holds, wall time grows LINEARLY with
+    * doc count at fixed dup density — an all-pairs or hot-bucket
+    * degeneration would bend the curve super-linearly. Corpus:
+    * [[textCorpus]] at 8 tokens per doc (shingle Jaccard 5/7 ≈ 0.71 —
+    * inside the banding's s-curve).
+    *
+    * `partitions` is the scale dial the curve itself exposed: the minhash
+    * partial aggregation holds rows/partitions doc keys × 16 md5 strings
+    * per task map — at fixed partitions=32 that map grows with corpus size
+    * until it spills (measured: the 20M point runs 3.1× the 10M point at
+    * 32 partitions, but scales linearly again once partitions grow with
+    * the data). On a real cluster partitions track input splits
+    * automatically; in local[] range generation they must be set.
+    */
+  private def dedup(c: Ctx): Fields = {
+    val (rows, runs, parts) = (c.long("rows"), c.int("runs"), c.int("partitions"))
+    val docs = textCorpus(c.spark, 0L, rows, parts, nTok = 8)
+    val (nCands, med) =
+      warmMedian(runs)(Dedup.minhashCandidates(docs, "text", "doc_id").count())
+    Seq("metric" -> "dedup_scale", "rows" -> rows, "runs" -> runs, "partitions" -> parts,
+      "candidates" -> nCands, "median_sec" -> med, "docs_per_sec" -> (rows / med).toLong)
+  }
+
+  /** The PageRank loop (COVERAGE.md "Graph analytics"): per iteration
+    * the edge relation is scanned from its src-partitioned checkpoint,
+    * the node-sized rank relation joins in, and one dst-keyed aggregate
+    * shuffles the contributions — so wall time per iteration should grow
+    * LINEARLY in |E| at fixed degree. A plan that re-derived the edges
+    * per round, re-shuffled them, or let the rank lineage re-expand would
+    * bend the curve super-linearly.
+    *
+    * Synthetic graph, fully distributed generation (no testdata
+    * dependence, any size): |V| = edges/10 nodes, each edge id e connects
+    * (e mod V) → (xxhash64(e) mod V) — pseudo-random degree-10 graph with
+    * self-loops dropped and duplicates removed (the operator's distinct-
+    * pairs contract). `partitions` follows the dedup lesson: in local[]
+    * range generation the partition count must track the data or
+    * per-task state spills at the top of the curve. The rank mass is the
+    * truncation-leak sanity anchor.
+    */
+  private def pagerank(c: Ctx): Fields = {
+    import c.spark.implicits._
+    val (nEdges, runs, parts) = (c.long("edges"), c.int("runs"), c.int("partitions"))
+    val iters = 5
+    val nNodes = (nEdges / 10L) max 10L
+    val edges = c.spark.range(0, nEdges, 1, parts)
+      .select(pmod($"id", lit(nNodes)).as("src"),
+        pmod(xxhash64($"id"), lit(nNodes)).as("dst"))
+      .filter($"src" =!= $"dst")
+      .distinct()
+    val (mass, med) = warmMedian(runs)(
+      PageRank.ranks(edges, iters).agg(sum($"rank_fp")).collect()(0).getLong(0))
+    Seq("metric" -> "pagerank_scale", "edges" -> nEdges, "iters" -> iters, "runs" -> runs,
+      "partitions" -> parts, "rank_mass_fp" -> mass, "median_sec" -> med,
+      "edge_iters_per_sec" -> (nEdges * iters / med).toLong)
+  }
+
+  /** Blocked record linkage (COVERAGE.md "Record linkage"): the match
+    * join's pair volume is Σ block², so with a blocking key whose
+    * CARDINALITY tracks the corpus (here a 5-hex-char prefix = 16^5 ≈ 1M
+    * blocks; on real data: zip+surname, sorted-neighborhood keys, …) the
+    * expected block size — and therefore pairs per record — stays
+    * constant and the whole resolve (block join + threshold levenshtein +
+    * CC) should hold flat records/sec. A fixed tiny block count (the
+    * naive choice) would square: doubling the corpus doubles every block
+    * and quadruples its pairs. `prefixLen` sets block cardinality
+    * (16^prefixLen): shortening it at a fixed corpus demonstrates the
+    * Σ block² cliff directly.
+    *
+    * Corpus: [[dirtyNames]]. Resolution must re-link each copy (cluster
+    * of 2) and leave the rest singletons, so matched-pair volume is
+    * ≈ corpus/10 (planted pairs, plus the rare md5 near-collision) —
+    * reported as the linearity anchor next to the timing.
+    */
+  private def linkage(c: Ctx): Fields = {
+    val (nRecs, runs, parts) = (c.long("records"), c.int("runs"), c.int("partitions"))
+    val prefixLen = c.int("prefixLen")
+    val (_, dirty) = dirtyNames(c.spark, nRecs, parts)
+    val (nPairs, med) = warmMedian(runs)(Linkage
+      .matches(dirty, "id", "name", substring(col("name"), 1, prefixLen), 2).count())
+    Seq("metric" -> "linkage_scale", "records" -> nRecs, "runs" -> runs, "partitions" -> parts,
+      "prefix_len" -> prefixLen, "matched_pairs" -> nPairs, "median_sec" -> med,
+      "records_per_sec" -> (nRecs / med).toLong)
+  }
+
+  /** INCREMENTAL entity resolution (COVERAGE.md round-9 "Incremental
+    * entity resolution") — with the HONEST cost model: what the probe
+    * avoids is re-BLOCKING and re-COMPARING the corpus (the Σ block²
+    * levenshtein term, the part that grows superlinearly with block
+    * occupancy); what it still pays, like every staged-swap incremental
+    * operator here (`IncrementalDedup`'s assignment swap included), is
+    * corpus-LINEAR metadata IO per batch — index scan, allIds distinct,
+    * full assignment rewrite. So the measured gap vs a full re-resolve is
+    * modest on tiny blocks (16^5 blocks at 1M records: blocks of ~1-2,
+    * compare cost ≈ 0 — speedup ~1.1) and widens exactly as block
+    * occupancy grows (`prefixLen=4`: speedup ~1.4 at 1M; on real master
+    * data, zip+surname blocks of 10²-10³, the compare term dominates
+    * outright). The assignment-swap linear term is removable at deploy
+    * time by versioned/partitioned assignment storage — the same remedy
+    * every table format applies — but the COMPARE term is the one that
+    * can't be fixed after the fact, and that is what the persisted index
+    * eliminates.
+    *
+    * Same corpus as the linkage case ([[dirtyNames]]); the BATCH plants
+    * typo copies of stored ids ≡ 3 mod 10 so every batch pair is
+    * batch×stored — the worst case for an incremental design (nothing
+    * resolvable inside the batch alone).
+    */
+  private def incrementalLinkage(c: Ctx): Fields = {
+    import c.spark.implicits._
+    val (nRecs, nBatch, runs) = (c.long("records"), c.long("batch"), c.int("runs"))
+    val (parts, prefixLen) = (c.int("partitions"), c.int("prefixLen"))
+    val blockKey = substring(col("name"), 1, prefixLen)
+    val (base, corpus) = dirtyNames(c.spark, nRecs, parts)
+    // batch = typo copies of STORED ids — every true pair crosses into the index
+    val batch = typos(base.filter($"id" % 10 === 3).limit(nBatch.toInt), 2000000000L)
+      .localCheckpoint(true)
+
+    // init the persisted state once (not timed: the nightly build)
+    val state = s"${c.scratch}/inclinkage"
+    IncrementalLinkage.addBatch(c.spark, state, corpus, "id", "name", blockKey, 2)
+
+    // probe: resolve the batch against the persisted index; the state is
+    // restored BEFORE each run (outside the timed window) so every run
+    // starts from the same index, and the timed window covers the honest
+    // per-batch cost (probe join + CC + state swap)
+    val assignBackup = c.spark.read.parquet(s"$state/assign").localCheckpoint(true)
+    val recsBackup = c.spark.read.parquet(s"$state/recs").localCheckpoint(true)
+    def restore(): Unit = {
+      assignBackup.write.mode("overwrite").parquet(s"$state/assign")
+      recsBackup.write.mode("overwrite").parquet(s"$state/recs")
+    }
+    val (nInc, probeSec) = warmMedian(runs, restore())(IncrementalLinkage
+      .addBatch(c.spark, state, batch, "id", "name", blockKey, 2).count())
+    // full: one-shot resolve of corpus ∪ batch
+    val (nFull, fullSec) = warmMedian(runs)(
+      Linkage.resolve(corpus.unionByName(batch), "id", "name", blockKey, 2).count())
+
+    require(nInc == nFull, s"incremental $nInc != full $nFull — law broken")
+    Seq("metric" -> "incremental_linkage_scale", "records" -> nRecs, "batch" -> nBatch,
+      "runs" -> runs, "partitions" -> parts, "prefix_len" -> prefixLen,
+      "assignments" -> nInc, "probe_median_sec" -> probeSec, "full_median_sec" -> fullSec,
+      "speedup" -> fullSec / probeSec)
+  }
+
+  /** COMMIT-LOG scale (VERDICT r12 item 8): LayoutSpec pins 50k FILES in
+    * one manifest; this pins a long HISTORY — the O(commits) metadata
+    * walks that bite first at a million commits. A synthetic table takes
+    * `commits` tiny commits (the streaming-sink shape: many small
+    * appends), then every protocol read that could secretly walk the
+    * whole log is timed over `probeRuns` calls:
+    *
+    *  - `latestVersion` WITH the `_head` hint (must be O(1 + gap): one
+    *    hint read + forward exists() probes) vs with the hint DELETED
+    *    (the full-listing fallback — O(commits), the pre-hint cost the
+    *    hint exists to avoid);
+    *  - `readManifest(head)` — O(refs of that one manifest), never
+    *    O(commits); ref count grows with appends until OPTIMIZE folds it,
+    *    which the case also demonstrates (post-compact manifest is
+    *    O(numFiles));
+    *  - `changesSince` from a cursor 5 behind head — O(drained × churn),
+    *    never O(history); the full drain from 0 is the linear anchor it
+    *    is compared against;
+    *  - `versionAsOf` (timestamp resolution) — O(log commits) manifest
+    *    probes on tsm-marked logs (the write-time clamp, r14; `ts_probes`
+    *    records the count), with the linear walk kept as the legacy-log
+    *    fallback;
+    *  - `vacuum(retainLast=5)` — O(retained manifests + data dirs),
+    *    never O(commits).
+    */
+  private def log(c: Ctx): Fields = {
+    val spark = c.spark
+    import spark.implicits._
+    val (n, probeRuns) = (c.int("commits"), c.int("probeRuns"))
+    val t = s"${c.scratch}/t"
+    FileOps.resetWorkDirs(spark, Seq(t))
+
+    // the streaming-sink shape: n tiny appends
+    val (buildSec, _) = time {
+      (1 to n).foreach { i =>
+        Versioned.commit(spark, t, Seq((i.toLong, s"r$i")).toDF("id", "s"))
+      }
+    }
+    val head = Versioned.latestVersion(spark, t).get
+    require(head == n.toLong, s"expected $n commits, got $head")
+
+    def probes(body: => Any): Double = median(probeRuns)(body)
+
+    val headHinted = probes(Versioned.latestVersion(spark, t))
+    // delete the hint: the full-listing fallback is the cost the hint
+    // exists to avoid
+    val hintPath = new org.apache.hadoop.fs.Path(s"$t/_commits/_head")
+    val hfs = hintPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hintBytes = {
+      val in = hfs.open(hintPath)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    hfs.delete(hintPath, false)
+    val headListed = probes(Versioned.latestVersion(spark, t))
+    val out = hfs.create(hintPath, true)
+    try out.write(hintBytes.getBytes("UTF-8")) finally out.close()
+
+    val manifestHead = probes(Versioned.readManifest(spark, t, head))
+    // mid-history resolution forces a real bisection (head/first-commit
+    // stamps short-circuit); tsm logs must answer in O(log n) manifest
+    // probes — the probe COUNT is the evidence, the seconds the bonus
+    val tss = Versioned.commitTimestamps(spark, t)
+    val midStamp = tss(tss.size / 2)._2
+    val tsResolve = probes(Versioned.versionAsOf(spark, t, midStamp))
+    val tsProbesUsed = Versioned.lastTsProbes.get()
+
+    // CDF drains: near-head cursor (the live-replica cadence) vs a
+    // 100-version linear anchor — drain cost must scale with DRAINED
+    // versions, never history (the per-version constant is the
+    // protocol-planning cost q_cdf_replica tracks)
+    def drain(behind: Long, cursor: String): (Double, Long) = {
+      Versioned.ackCursor(spark, cursor, head - behind)
+      time(Versioned.changesSince(spark, t, cursor).get._1.count())
+    }
+    val (drain5Sec, drained5) = drain(5L, s"$t/_cursor_bench")
+    val (drain100Sec, drained100) =
+      drain(math.min(n - 1, 100).toLong, s"$t/_cursor_bench100")
+
+    // OPTIMIZE folds the O(appends) ref growth back to O(numFiles);
+    // vacuum AFTER it (retain 1) sweeps every superseded append dir —
+    // an append-only history has nothing sweepable before the fold
+    val refsBefore = Versioned.readManifest(spark, t, head).refs.size
+    val (optimizeSec, _) = time(Versioned.compact(spark, t, numFiles = 4))
+    val refsAfter = Versioned.readManifest(spark, t, head + 1).refs.size
+    val manifestCompact = probes(Versioned.readManifest(spark, t, head + 1))
+    val (vacuumSec, swept) = time(Versioned.vacuum(spark, t, retainLast = 1))
+
+    Seq("metric" -> "log_scale", "commits" -> n, "build_sec" -> Fixed(buildSec, 1),
+      "head_hinted_sec" -> Fixed(headHinted, 5), "head_listed_sec" -> Fixed(headListed, 5),
+      "manifest_head_sec" -> Fixed(manifestHead, 5),
+      "manifest_compact_sec" -> Fixed(manifestCompact, 5),
+      "ts_resolve_sec" -> Fixed(tsResolve, 4), "ts_probes" -> tsProbesUsed,
+      "drain5_sec" -> Fixed(drain5Sec, 2), "drain5_rows" -> drained5,
+      "drain100_sec" -> Fixed(drain100Sec, 2), "drain100_rows" -> drained100,
+      "vacuum_sec" -> Fixed(vacuumSec, 2), "vacuum_swept" -> swept.size,
+      "optimize_sec" -> Fixed(optimizeSec, 2), "refs_before" -> refsBefore,
+      "refs_after" -> refsAfter)
+  }
+
+  /** The sessionize shape (COVERAGE.md "Event analytics"): one shuffle
+    * on the entity key shared by both windows — if that claim holds, wall
+    * time should grow LINEARLY with event count at fixed user cardinality
+    * (per-key timelines grow, the shuffle and sorts grow with rows,
+    * nothing quadratic or driver-bound appears). One curve point per
+    * `rowsList` entry.
+    *
+    * Synthetic events: deterministic xxhash64-derived timestamps over a
+    * 30-day window for `users` users — no testdata dependence, any size.
+    */
+  private def sessionize(c: Ctx): Fields = {
+    import c.spark.implicits._
+    val (users, runs) = (c.long("users"), c.int("runs"))
+    val curve = c.list("rowsList").map(_.toLong).map { n =>
+      val events = c.spark.range(0, n, 1, 32)
+        .select($"id".as("event_id"),
+          ($"id" % users).as("user_id"),
+          timestamp_micros(lit(1704067200000000L) + // 2024-01-01 UTC
+            pmod(xxhash64($"id"), lit(30L * 86400 * 1000000L))).as("ts"))
+      val (_, med) = warmMedian(runs)(Sessions
+        .sessionize(events, $"user_id", $"ts", $"event_id", gapSec = 1800L)
+        .groupBy($"user_id", $"session_idx")
+        .agg(count(lit(1)).as("n_events"), min($"ts").as("t0"))
+        .write.format("noop").mode("overwrite").save())
+      Seq("rows" -> n, "median_sec" -> med, "rows_per_sec" -> (n / med).toLong)
+    }
+    Seq("metric" -> "sessionize_scale", "users" -> users, "runs" -> runs, "curve" -> curve)
+  }
+
+  /** The INCREMENTAL set-similarity claim: probing a FIXED batch against
+    * a growing persisted prefix index must cost ~the batch, not the
+    * corpus — the index is scanned (IO linear in corpus) but never
+    * re-tokenized, re-ranked, or re-joined against itself, so the probe
+    * curve should grow far slower than the full-join curve on the same
+    * corpus. A degeneration (frozen-df drift sending hot tokens into
+    * prefixes, or an accidental corpus² join) would bend the probe curve
+    * toward the full-join curve.
+    *
+    * Corpus: [[textCorpus]] at 8 tokens per doc. The BATCH is a fixed
+    * 10k-doc slice (near-dup structure against the corpus tail). The
+    * line carries BOTH times: the batch probe against the persisted
+    * index, and the full similarityJoin over corpus ∪ batch — the
+    * quantity the incremental path exists to avoid.
+    *
+    * Measured (round 8, local[32], 10k-doc batch): corpus 100k → 400k
+    * (4×) moves the probe 2.54 s → 4.63 s (1.8× — the linear part is the
+    * index scan) while the full join moves 4.49 s → 27.7 s (6.2× — corpus
+    * re-rank + self-join); full/probe widens 1.77× → 5.98× and keeps
+    * widening with corpus size, which is the incremental claim made
+    * measurable. Those probe figures, and round 18's, include a copy of
+    * the whole index inside the timed window (PERF_NOTES.md).
+    */
+  private def setjoin(c: Ctx): Fields = {
+    val (corpusRows, runs, parts) = (c.long("corpusRows"), c.int("runs"), c.int("partitions"))
+    val batchRows = 10000L
+    val threshold = 0.6
+    val corpus = textCorpus(c.spark, 0L, corpusRows, parts, nTok = 8)
+    val batch = textCorpus(c.spark, corpusRows, corpusRows + batchRows, parts, nTok = 8)
+
+    val state = new java.io.File(c.scratch, "state")
+    IncrementalSetJoin.init(c.spark, state.toString, corpus, "text", "doc_id", threshold)
+    // addBatch appends to its state, so every probe runs on a fresh copy
+    // of the index, made (and the last copy dropped) before its clock
+    // starts
+    var copies = 0
+    def copy = new java.io.File(c.scratch, s"run$copies")
+    def freshCopy(): Unit = {
+      FileUtils.deleteQuietly(copy)
+      copies += 1
+      FileUtils.copyDirectory(state, copy)
+    }
+    val (nPairs, pm) = warmMedian(runs, freshCopy())(IncrementalSetJoin
+      .addBatch(c.spark, copy.toString, batch, "text", "doc_id", threshold).count())
+    val (_, fm) = warmMedian(runs)(SetJoin.similarityJoin(
+      corpus.unionByName(batch), "text", "doc_id", threshold).count())
+    Seq("metric" -> "setjoin_scale", "corpus_rows" -> corpusRows, "batch_rows" -> batchRows,
+      "runs" -> runs, "partitions" -> parts, "batch_pairs" -> nPairs,
+      "probe_median_sec" -> pm, "full_median_sec" -> fm, "full_over_probe" -> Fixed(fm / pm, 2))
+  }
+
+  /** The repeated-span pass (COVERAGE.md "Repeated-span exact substring
+    * dedup"): the pipeline is exactly two shuffles — occurrences
+    * clustered on the span hash (COUNT window), survivors clustered on
+    * doc id (interval merge) — so wall time must grow LINEARLY with
+    * corpus size at fixed dup density. A hot-span degeneration (all
+    * occurrences of a boilerplate span converging on one reducer that
+    * can't spill) or an accidental join would bend the curve.
+    *
+    * Corpus: [[textCorpus]] at 40 tokens per doc, so spans 2..33 of each
+    * near-copy repeat (fixed ~10% dup density at every size) while the
+    * rest of the corpus stays unique.
+    */
+  private def span(c: Ctx): Fields = {
+    val (rows, runs, parts) = (c.long("rows"), c.int("runs"), c.int("partitions"))
+    val docs = textCorpus(c.spark, 0L, rows, parts, nTok = 40)
+    val ((hit, dupToks), med) = warmMedian(runs) {
+      val r = Dedup.repeatedSpans(docs, "text", "doc_id", k = 8)
+        .agg(count(lit(1)).as("n_docs_hit"),
+          sum(col("dup_tokens")).cast("long").as("dup_tokens"))
+        .collect()(0)
+      (r.getLong(0), r.getLong(1))
+    }
+    Seq("metric" -> "span_scale", "rows" -> rows, "runs" -> runs, "partitions" -> parts,
+      "docs_hit" -> hit, "dup_tokens" -> dupToks, "median_sec" -> med,
+      "docs_per_sec" -> (rows / med).toLong)
+  }
+
+  /** The bucketed-upsert claim (COVERAGE.md B3): the eliminated
+    * target-side Exchange is O(target bytes), so the bucketed merge's
+    * advantage must GROW with target size — a curve, not a point
+    * (VERDICT r5 task 8).
+    *
+    * Method (matches the original sf0.1 measurement): target =
+    * `lineitem` of `SPARK_GRAFT_SF_DIR` unioned ×K with shifted keys
+    * (genuinely distinct rows, K× the bytes), stored once as a
+    * key-bucketed metastore table and once as a plain parquet table;
+    * source = a fixed 20k-row update batch (half overlapping keys, half
+    * new). Timed region = `Upsert.merge` → noop sink (compute only, no
+    * sink variance), broadcast joins off (at warehouse scale neither side
+    * broadcasts — that is the regime bucketing targets; the session's
+    * setting is restored after), median of `runs`.
+    */
+  private def upsert(c: Ctx): Fields = {
+    val spark = c.spark
+    import spark.implicits._
+    val runs = c.int("runs")
+    val noBroadcast = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(noBroadcast)
+    spark.conf.set(noBroadcast, "-1")
+    try {
+      val keys = Seq("l_orderkey", "l_linenumber")
+      val base = Tables(spark, c.sfDir, "lineitem")
+      val maxKey = base.agg(max($"l_orderkey")).head().getLong(0) + 1
+      // fixed-size source: 10k updates to existing keys + 10k brand-new keys
+      val source = base.filter($"l_orderkey" % 601 === 0)
+        .limit(10000)
+        .withColumn("l_returnflag", lit("U"))
+        .unionByName(
+          base.filter($"l_orderkey" % 601 === 1).limit(10000)
+            .withColumn("l_orderkey", -$"l_orderkey"))
+        .cache()
+      source.count()
+
+      val curve = c.list("multipliers").map(_.toInt).map { k =>
+        val target = (0 until k)
+          .map(i => base.withColumn("l_orderkey", $"l_orderkey" + lit(i * maxKey)))
+          .reduce(_ unionByName _)
+        val tbl = s"upsert_scale_x$k"
+        spark.sql(s"DROP TABLE IF EXISTS ${tbl}_b")
+        spark.sql(s"DROP TABLE IF EXISTS ${tbl}_p")
+        target.repartition(32, keys.map(col): _*)
+          .write.mode("overwrite").bucketBy(32, keys.head, keys.tail: _*)
+          .sortBy(keys.head, keys.tail: _*).saveAsTable(s"${tbl}_b")
+        target.write.mode("overwrite").saveAsTable(s"${tbl}_p")
+        val rows = spark.table(s"${tbl}_b").count()
+        def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+        // warm both paths once (file listing, codegen), then time
+        def bucketed = Upsert.merge(spark.table(s"${tbl}_b"), source, keys)
+        def plain = Upsert.merge(spark.table(s"${tbl}_p"), source, keys)
+        noop(bucketed)
+        noop(plain)
+        val tb = median(runs)(noop(bucketed))
+        val tp = median(runs)(noop(plain))
+        spark.sql(s"DROP TABLE IF EXISTS ${tbl}_b")
+        spark.sql(s"DROP TABLE IF EXISTS ${tbl}_p")
+        Seq("mult" -> k, "target_rows" -> rows, "bucketed_sec" -> tb,
+          "unbucketed_sec" -> tp, "speedup" -> tp / tb)
+      }
+      source.unpersist()
+      Seq("metric" -> "upsert_scale", "sf_dir" -> c.sfDir, "runs" -> runs, "curve" -> curve)
+    } finally prior.fold(spark.conf.unset(noBroadcast))(spark.conf.set(noBroadcast, _))
+  }
+}

@@ -774,7 +774,7 @@ object Versioned {
       txn: Option[(String, Long)] = None): Long = {
     val parentV = latestVersion(spark, table)
     commitAt(spark, table, df, parentV.getOrElse(0L) + 1, parentV, overwrite,
-      writerOptions, txn)._1
+      writerOptions, txn)
   }
 
   /** Commit `df` as a PARTITIONED snapshot/append (VERDICT r13 item 3 —
@@ -821,7 +821,7 @@ object Versioned {
           s"cannot repartition it by ${normCols.mkString(",")} (overwrite can)")
     }
     commitAt(spark, table, arranged, parentV.getOrElse(0L) + 1, parentV,
-      overwrite, declaredPartCols = Some(normCols))._1
+      overwrite, declaredPartCols = Some(normCols))
   }
 
   /** Append with a bounded CAS-retry loop — the verb for MAPPED tables
@@ -1015,15 +1015,19 @@ object Versioned {
 
   /** The commit body with the target version made explicit — what a
     * racing writer actually holds is a STALE view (its computed `v` and
-    * parent), so the CAS law is deterministic to test from here. Returns
-    * the published version and the path of the data dir it staged.
+    * parent), so the CAS law is deterministic to test from here.
+    * `harvest` writes the staged dir's sidecars (`_stats`, `_ndv`,
+    * `_qtl`) after constraint validation and BEFORE the CAS, so no
+    * reader ever plans a published dir without them; a harvest that
+    * throws aborts the commit. Returns the published version.
     */
   private[graft] def commitAt(spark: SparkSession, table: String,
       df: DataFrame, v: Long, parentV: Option[Long],
       overwrite: Boolean,
       writerOptions: Map[String, String] = Map.empty,
       txn: Option[(String, Long)] = None,
-      declaredPartCols: Option[Seq[String]] = None): (Long, String) = {
+      declaredPartCols: Option[Seq[String]] = None,
+      harvest: String => Unit = _ => ()): Long = {
     val parent = parentV.map(pv => readManifest(spark, table, pv))
     val parentSchemaOpt: Option[org.apache.spark.sql.types.StructType] =
       if (overwrite) None
@@ -1116,10 +1120,11 @@ object Versioned {
       val dirName = t.stage("v")
       stageDataDir(spark, table, dirName, physDf, writerOptions, partCols)
       validateConstraints(spark, table, dirName, inherited, mapping)
-      (t.publish(if (overwrite) "overwrite" else "append",
+      harvest(t.path(dirName))
+      t.publish(if (overwrite) "overwrite" else "append",
         state.copy(refs = state.refs :+ dirName,
           schemaJson = Some(pubSchema.json), colmap = mapping,
-          partCols = partCols), txns = txn.toSeq), t.path(dirName))
+          partCols = partCols), txns = txn.toSeq)
     }
   }
 
@@ -1295,7 +1300,7 @@ object Versioned {
     val parentV = latestVersion(spark, table)
     val snap = parentV.map(v => read(spark, table, Some(v)))
       .getOrElse(throw new IllegalArgumentException(s"no commits under $table"))
-    commitAt(spark, table, transform(snap), parentV.get + 1, parentV, overwrite)._1
+    commitAt(spark, table, transform(snap), parentV.get + 1, parentV, overwrite)
   }
 
   /** Re-run `body` on losing the commit race — the MAINTENANCE side of
@@ -2494,23 +2499,22 @@ object Versioned {
   def commitWithStats(spark: SparkSession, table: String, df: DataFrame,
       statsCols: Seq[String], overwrite: Boolean = false,
       bloomCols: Seq[String] = Nil): Long =
-    statsCommit(spark, table, df, statsCols, overwrite, bloomCols)._1
+    statsCommit(spark, table, df, statsCols, overwrite, bloomCols, _ => ())
 
-  /** [[commitWithStats]], answering the published version and the path
-    * of the data dir it staged.
+  /** [[commitWithStats]] whose harvest also writes `sketch` into the
+    * staged dir, before the commit publishes.
     */
   private def statsCommit(spark: SparkSession, table: String, df: DataFrame,
-      statsCols: Seq[String], overwrite: Boolean,
-      bloomCols: Seq[String] = Nil): (Long, String) = {
+      statsCols: Seq[String], overwrite: Boolean, bloomCols: Seq[String],
+      sketch: String => Unit): Long = {
     val pv = latestVersion(spark, table)
     pv.foreach(v =>
       requireNoFeatures(readManifest(spark, table, v), table, "commitWithStats"))
     // bloomCols: write-time parquet bloom filters per listed column —
     // the point-lookup complement to the stats manifest ([[lookupEq]])
-    val (v, dir) = commitAt(spark, table, df, pv.getOrElse(0L) + 1, pv, overwrite,
-      bloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap)
-    Layout.writeStatsManifest(spark, dir, statsCols)
-    (v, dir)
+    commitAt(spark, table, df, pv.getOrElse(0L) + 1, pv, overwrite,
+      bloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap,
+      harvest = { dir => Layout.writeStatsManifest(spark, dir, statsCols); sketch(dir) })
   }
 
   /** Per-FILE metadata of a snapshot — the Iceberg `table$files` /
@@ -3285,11 +3289,9 @@ object Versioned {
     */
   def commitWithNdv(spark: SparkSession, table: String, df: DataFrame,
       statsCols: Seq[String], ndvCols: Seq[String],
-      overwrite: Boolean = false): Long = {
-    val (v, dir) = statsCommit(spark, table, df, statsCols, overwrite)
-    Layout.writeNdvSketch(spark, dir, ndvCols)
-    v
-  }
+      overwrite: Boolean = false): Long =
+    statsCommit(spark, table, df, statsCols, overwrite, Nil,
+      Layout.writeNdvSketch(spark, _, ndvCols))
 
   /** [[commitWithStats]] + a per-file KLL quantile-sketch manifest on
     * the new dir ([[Layout.writeQuantileSketch]]) — write-time cost
@@ -3297,11 +3299,9 @@ object Versioned {
     */
   def commitWithQuantiles(spark: SparkSession, table: String, df: DataFrame,
       statsCols: Seq[String], qtlCols: Seq[String],
-      overwrite: Boolean = false): Long = {
-    val (v, dir) = statsCommit(spark, table, df, statsCols, overwrite)
-    Layout.writeQuantileSketch(spark, dir, qtlCols)
-    v
-  }
+      overwrite: Boolean = false): Long =
+    statsCommit(spark, table, df, statsCols, overwrite, Nil,
+      Layout.writeQuantileSketch(spark, _, qtlCols))
 
   /** Metadata-only approximate QUANTILES of `column` at `probs` — the
     * percentile statistic (p50/p95/p99 of a latency or price column)
@@ -3525,7 +3525,7 @@ object Versioned {
     * (dirs are claimed by exactly one commit — UUID-unique — so a
     * broadcast dir→version join is exact). A replica catching up on an
     * append-heavy history therefore pays O(distinct schema classes)
-    * reads, not O(versions) — LogScaleBench's drain cost collapses
+    * reads, not O(versions) — `ScaleLab log`'s drain cost collapses
     * accordingly. Any other version (dv churn, rewrites, overwrites,
     * compactions, legacy schema-less manifests) falls back to the
     * per-version [[changes]] plan.
@@ -3695,10 +3695,10 @@ object Versioned {
     // an OPTIMIZE is an overwrite COMMIT but not a re-declaration: a
     // partitioned table keeps its partcols (and the compacted dir takes
     // the partitioned layout), exactly Delta's OPTIMIZE semantics
-    val (v, dir) = commitAt(spark, table, snap, pv + 1, Some(pv),
-      overwrite = true, declaredPartCols = Some(m.partCols))
-    if (statsCols.nonEmpty) Layout.writeStatsManifest(spark, dir, statsCols)
-    v
+    commitAt(spark, table, snap, pv + 1, Some(pv),
+      overwrite = true, declaredPartCols = Some(m.partCols),
+      harvest = dir =>
+        if (statsCols.nonEmpty) Layout.writeStatsManifest(spark, dir, statsCols))
   }
 
   /** OPTIMIZE + re-layout — [[compact]] that RE-SORTS while it folds
@@ -3839,7 +3839,7 @@ object Versioned {
         kept.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
       }
     commitAt(spark, table, arranged, pv.getOrElse(0L) + 1, pv,
-      overwrite = true, declaredPartCols = Some(partCols))._1
+      overwrite = true, declaredPartCols = Some(partCols))
   }
 
   /** Delete data dirs none of the last `retainLast` snapshots reference
