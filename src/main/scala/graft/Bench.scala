@@ -128,7 +128,7 @@ object Bench {
     * hold links into the read-only testdata — following one would try
     * to delete source data).
     */
-  private def deleteRec(f: java.io.File): Unit = {
+  private[graft] def deleteRec(f: java.io.File): Unit = {
     if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
     f.delete(): Unit

@@ -14,6 +14,22 @@ object Verify {
     // Single canonical session config (Engine.builder): AQE + UTC +
     // shuffle-partition sizing must match what the bench measures.
     val spark = Engine.session()
+    try dump(spark, sfDir, outDir, only)
+    finally deleteWorkDirs(new java.io.File(sys.props("java.io.tmpdir")),
+      ProcessHandle.current().pid())
+  }
+
+  /** Deletes the work dirs this process's oracle entries staged under
+    * `tmp` (each entry stages into `graft_<entry>_<pid>`), without
+    * following symlinks; other processes' dirs stay.
+    */
+  private[graft] def deleteWorkDirs(tmp: java.io.File, pid: Long): Unit =
+    Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.getName.startsWith("graft_") && f.getName.endsWith(s"_$pid"))
+      .foreach(Bench.deleteRec)
+
+  private def dump(spark: SparkSession, sfDir: String,
+      outDir: String, only: Option[Set[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,8 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for LLM training corpora: exact (content-hash
   * groupBy), MinHash-LSH near-dup candidates, SimHash near-dup pairs, and
@@ -257,9 +260,24 @@ object Dedup {
     * component, not per pair (pairs (a,b) and (b,c) are one 3-doc
     * cluster, and pairwise dedup would wrongly keep two of them).
     * Returns (id, comp) for every id in `pairs`, comp = the component's
-    * minimum id (a deterministic representative).
+    * minimum id (a deterministic representative); an id that is null
+    * yields (null, null).
     *
-    * Plan: alternating LARGE-STAR / SMALL-STAR (Kiveris et al.,
+    * One staging job checkpoints the canonical (hi, lo) pairs and counts
+    * them with an `observe` aggregate in the same job. The count picks
+    * the plan, by the rule Spark uses to broadcast a join side: when
+    * rows × the row's default size is at or under
+    * `spark.sql.autoBroadcastJoinThreshold`, the edge set is collected
+    * and closed ON THE DRIVER ([[componentsOnDriver]]: union-find, one
+    * collect job, a local relation out); above it, or with a negative
+    * threshold, the distributed star loop below runs. Both give the same
+    * rows and the same schema (`ConnectedComponentsSpec`). The observed
+    * count is at-least-once under task retries: an inflated count can
+    * only send a small input to the loop, which is exact too — never a
+    * large one to the driver. Integral and string ids take the driver
+    * path; any other id type (decimal, date, ...) always takes the loop.
+    *
+    * Loop plan: alternating LARGE-STAR / SMALL-STAR (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14 — public
     * algorithm). Large-star re-attaches every neighbor v > u to the
     * minimum of u's closed neighborhood; small-star does the same for
@@ -292,12 +310,39 @@ object Dedup {
     * unset, it stays eager localCheckpoint.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    // canonical (hi, lo) undirected edges; self-pairs contribute no edge
-    var edges = pairs
+    // canonical (hi, lo) pairs, self-pairs kept so every id stays in the
+    // staged set; a pair with a null id stages as (other id, null), so
+    // the null id is kept too and the pair still adds no edge
+    val canon = pairs
       .select(greatest(col("id_a"), col("id_b")).as("u"),
-        least(col("id_a"), col("id_b")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct().transform(graft.ops.Checkpoints.stage)
+        when(col("id_a").isNotNull && col("id_b").isNotNull,
+          least(col("id_a"), col("id_b"))).as("v"))
+      .distinct()
+    val counted = canon.observe("cc_stage", count(lit(1)).as("n"))
+    val staged = counted.transform(graft.ops.Checkpoints.stage)
+    val rows = counted.queryExecution.observedMetrics.get("cc_stage")
+      .map(_.getLong(0))
+      .getOrElse(throw new IllegalStateException(
+        "cc_stage metrics missing after eager checkpoint"))
+    val threshold = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    driverKey(canon.schema("u").dataType) match {
+      case Some(key) if threshold >= 0 && rows * canon.schema.defaultSize <= threshold =>
+        val edges = staged.collect()
+        // the loop's output schema, by analysis alone (no job)
+        val schema = labelNodes(pairs, staged).schema
+        graft.ops.Checkpoints.free(staged)
+        componentsOnDriver(pairs.sparkSession, edges, schema, key)
+      case _ => starLoop(pairs, staged.filter(col("u") =!= col("v")), maxIter)
+    }
+  }
+
+  /** The distributed large-star/small-star loop from the canonical,
+    * self-pair-free edge set `canonEdges` (a checkpoint it frees); see
+    * [[connectedComponents]].
+    */
+  private def starLoop(pairs: DataFrame, canonEdges: DataFrame,
+      maxIter: Int): DataFrame = {
+    var edges = canonEdges
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -365,12 +410,67 @@ object Dedup {
         s"connectedComponents did not converge in $maxIter rounds — raise maxIter")
     // terminal state is a star per component: every non-min node carries
     // exactly (node, comp-min); the min itself appears only as a lo side
+    labelNodes(pairs, edges)
+  }
+
+  /** (id, comp) for every id of `pairs`: comp = the smallest lo side
+    * `edges` gives the id as a hi side, else the id itself.
+    */
+  private def labelNodes(pairs: DataFrame, edges: DataFrame): DataFrame = {
     val nodes = pairs.select(col("id_a").as("id"))
       .union(pairs.select(col("id_b").as("id"))).distinct()
     nodes.join(
         edges.groupBy(col("u")).agg(min(col("v")).as("__c"))
           .select(col("u").as("id"), col("__c")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__c"), col("id")).as("comp"))
+  }
+
+  /** Driver-side sort key for an id type [[componentsOnDriver]] takes,
+    * ordered as Spark's `min`/`least` order it: integral ids compare as
+    * their boxed values, strings as UTF-8 bytes (`UTF8String`; Java's
+    * UTF-16 `String.compareTo` orders supplementary characters
+    * differently). None for every other type.
+    */
+  private def driverKey(t: DataType): Option[Any => AnyRef] = t match {
+    case ByteType | ShortType | IntegerType | LongType => Some(_.asInstanceOf[AnyRef])
+    case StringType => Some(s => UTF8String.fromString(s.asInstanceOf[String]))
+    case _ => None
+  }
+
+  /** Union-find over the collected staged (u, v) pairs: the distinct ids
+    * are sorted and indexed by binary search, every union roots at the
+    * smaller index (so a root is its component's minimum id) and `find`
+    * compresses paths. A row with a null `v` came from a pair with a null
+    * id: it adds no edge, and the null id yields (null, null), as the
+    * loop's null node does.
+    */
+  private def componentsOnDriver(spark: SparkSession, staged: Array[Row],
+      schema: StructType, key: Any => AnyRef): DataFrame = {
+    val order: Ordering[AnyRef] = (a, b) => a.asInstanceOf[Comparable[AnyRef]].compareTo(b)
+    val ids = staged.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .filter(_ != null).map(key).toArray.distinct.sorted(order)
+    def index(id: Any): Int = java.util.Arrays.binarySearch(ids, key(id), order)
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var x = i
+      while (parent(x) != root) { val up = parent(x); parent(x) = root; x = up }
+      root
+    }
+    staged.foreach { r =>
+      if (!r.isNullAt(1)) {
+        val (a, b) = (find(index(r.get(0))), find(index(r.get(1))))
+        if (a < b) parent(b) = a else parent(a) = b
+      }
+    }
+    val value: AnyRef => Any = {
+      case s: UTF8String => s.toString
+      case id => id
+    }
+    val labelled = ids.indices.map(i => Row(value(ids(i)), value(ids(find(i)))))
+    val nullId = if (staged.exists(_.isNullAt(1))) Seq(Row(null, null)) else Nil
+    spark.createDataFrame((labelled ++ nullId).asJava, schema)
   }
 
   /** Exact n-gram Jaccard for candidate pairs: |A∩B| / |A∪B| over DISTINCT

@@ -190,10 +190,30 @@ class DedupSpec extends SparkSpec {
     // round, so ⌈log2(9999)⌉ = 14 contraction rounds + 2 no-change
     // detection rounds must suffice — this pins the O(log n) behavior,
     // not just correctness
+    // (a negative broadcast threshold keeps this small input on the loop)
     val n = 10000L
     val path = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
       .repartition(8)
-    val comp = Dedup.connectedComponents(path, maxIter = 16)
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val comp = Dedup.connectedComponents(path, maxIter = 16)
+      val distinctComps = comp.select($"comp").distinct().collect().map(_.getLong(0))
+      assert(distinctComps.toSeq == Seq(1L), "one path = one component rooted at min id")
+      assert(comp.count() == n)
+    }
+  }
+
+  test("connectedComponents: a broadcast-sized 10k-node PATH closes on the " +
+      "driver with no star rounds") {
+    import spark.implicits._
+    // 9999 edges × 16 bytes sits far under the default threshold: the
+    // driver's union-find needs no rounds, whatever the diameter. Jobs:
+    // the input's repartition shuffle, the staging distinct's shuffle,
+    // the checkpoint and the collect
+    val n = 10000L
+    val path = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      .repartition(8)
+    val (comp, jobs) = jobsDuring(Dedup.connectedComponents(path, maxIter = 16))
+    assert(jobs <= 4, s"driver path started $jobs jobs")
     val distinctComps = comp.select($"comp").distinct().collect().map(_.getLong(0))
     assert(distinctComps.toSeq == Seq(1L), "one path = one component rooted at min id")
     assert(comp.count() == n)
@@ -203,10 +223,22 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // a 200-node chain needs ~log2(200) ≈ 8 star alternations; maxIter=2
     // must throw, never silently emit labels that are not yet components
+    // (a negative broadcast threshold keeps this small input on the loop)
     val chain = (1L to 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 2)
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      intercept[IllegalStateException] {
+        Dedup.connectedComponents(chain, maxIter = 2)
+      }
     }
+  }
+
+  test("connectedComponents: the driver path closes the same chain with " +
+      "no round budget to run out of") {
+    import spark.implicits._
+    val chain = (1L to 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val comp = Dedup.connectedComponents(chain, maxIter = 2)
+      .as[(Long, Long)].collect()
+    assert(comp.toSet == (1L to 200L).map(_ -> 1L).toSet)
   }
 
   test("hammingPairs: pigeonhole candidates == brute force at any width; " +

@@ -75,14 +75,18 @@ class ReliableCheckpointSpec extends SparkSpec {
       (1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (20L, 21L),
       (4L, 5L), (5L, 6L), (12L, 13L), (21L, 22L), (22L, 23L), (23L, 24L)
     ).toDF("id_a", "id_b")
-    val base = graft.llm.Dedup.connectedComponents(pairs)
-      .orderBy($"id").as[(Long, Long)].collect().toSeq
-    val rel = withReliable { _ =>
-      graft.llm.Dedup.connectedComponents(pairs)
+    // a negative broadcast threshold keeps this small input on the
+    // checkpointed star loop instead of the driver's union-find
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val base = graft.llm.Dedup.connectedComponents(pairs)
         .orderBy($"id").as[(Long, Long)].collect().toSeq
+      val rel = withReliable { _ =>
+        graft.llm.Dedup.connectedComponents(pairs)
+          .orderBy($"id").as[(Long, Long)].collect().toSeq
+      }
+      assert(rel == base,
+        "reliable checkpointing must not change component labels")
     }
-    assert(rel == base,
-      "reliable checkpointing must not change component labels")
   }
 
   test("Hierarchy.ancestorClosure: identical closure under both modes") {
